@@ -76,7 +76,8 @@ object NaiveTripleOracle {
   }
 }
 
-class PipelineSpec extends GraftSuite {
+class PipelineSpec extends GraftSuite
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
 
   test("end-to-end triples match the independent oracle with P/R >= 0.95") {
     import spark.implicits._
@@ -155,5 +156,30 @@ class PipelineSpec extends GraftSuite {
       .filter(_.pred == "mentions").collect().map(_.confidence).distinct.sorted
     assert(confs.forall(c => Set(1.0 / 3, 2.0 / 3, 1.0).exists(e => math.abs(c - e) < 1e-9)))
     assert(confs.length >= 2, "expected ensemble disagreement in the corpus")
+  }
+
+  test("Triples.all's null filter is a no-op: turnAgg keys are never null and " +
+      "the mentions rows are unchanged") {
+    import org.apache.spark.sql.functions.col
+    val cfg = Pipeline.Config(nConvs = 15, nBase = 48)
+    val l = Pipeline.linked(spark, cfg,
+      Pipeline.mentions(spark, cfg, Pipeline.turns(spark, cfg).toDF()))
+    val turnAgg = graft.operators.Aggregation.perTurn(l)
+    assert(turnAgg.filter(col("conv_id").isNull || col("turn_idx").isNull).count() === 0)
+    val unfiltered = graft.operators.Triples.mentionsTriples(turnAgg).count()
+    val viaAll = graft.operators.Triples
+      .all(turnAgg, SynthTranscripts.turnsMeta(spark, cfg.nConvs))
+      .filter(_.pred == "mentions").count()
+    assert(unfiltered > 0 && viaAll === unfiltered)
+  }
+
+  test("Triples.all reuses the extraction→perTurn exchange: the executed plan " +
+      "holds a ReusedExchange") {
+    val ds = Pipeline.triples(spark, Pipeline.Config(nConvs = 15, nBase = 48))
+    ds.collect() // resolve the AQE final plan
+    val reused = collectWithSubqueries(ds.queryExecution.executedPlan) {
+      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => r
+    }
+    assert(reused.nonEmpty, ds.queryExecution.executedPlan.toString)
   }
 }
